@@ -309,12 +309,12 @@ def pages_tmaps() -> list[TriplesMap]:
 # --------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: KG dump over web pages (HTML->text UDF + mapping compile)
+    """Flagship: KG dump over web pages (HTML->text extraction + mapping compile)
     plus mention triples, at sf0.001."""
     pages = _pages_df(spark, SF1)
     base = SparkMappingCompiler(spark, {"pages": pages}).compile(pages_tmaps())
     adict = men.build_alias_dict(pages)
-    mt = men.mention_triples(men.detect_mentions(pages, adict))
+    mt = men.mention_triples(men.mention_entities(pages, adict), pre_deduped=True)
     return base.unionByName(mt)
 
 
@@ -349,9 +349,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def kg_mentions(spark, sf):
         # round 7: the pipeline's array-intersect fast path (guide §2.3 —
         # no 100-tokens-per-doc posexplode blowup just to find ~0.3 matches
-        # per doc).  mention_entities emits the SAME distinct
-        # (url, entity_id) pair set detect_mentions + distinct produced, so
-        # the oracle hash is unchanged; pre_deduped skips the second
+        # per doc).  mention_entities emits the distinct (url, entity_id)
+        # pair set the oracle expects; pre_deduped skips the second
         # distinct (urls are unique by construction in _pages_df).
         pages = _pages_df(spark, sf)
         adict = men.build_alias_dict(pages)

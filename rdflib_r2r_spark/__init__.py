@@ -8,7 +8,7 @@ Spark-first pipeline:
   literals, blank-node skolemization, referencing-object-map joins) compiled
   into Catalyst logical plans (``compiler.SparkMappingCompiler``).
 - Web-document generalization per the north star: HTML->text extraction
-  (Arrow pandas UDF), mention detection + broadcast alias dictionary,
+  (Spark built-ins, JVM regex), mention detection + broadcast alias dictionary,
   MinHash-LSH candidate blocking, hash-min connected-components
   canonicalization, bucketed triple-table materialization with per-partition
   lineage and checkpoint-resume (``pipeline``).

@@ -88,10 +88,6 @@ class KGPipeline:
     threshold: float = 0.5
     resume: bool = True
     count_rows: bool = True
-    # concurrent submission of independent stages pays off only when stages
-    # are overhead-dominated (small inputs); at scale the heavy stages thrash
-    # each other's executors, so default to sequential.
-    parallel_stages: bool = False
     # checkpoint_stages=False fuses all intermediate stages into one DAG:
     # multi-consumer intermediates are memory/disk-persisted instead of
     # parquet round-tripped, and only the final bucketed triple table (plus
@@ -99,11 +95,6 @@ class KGPipeline:
     # (default) is the resumable production shape — on a cluster its writes
     # go to distributed storage, locally they serialize on one disk.
     checkpoint_stages: bool = True
-    # fused mode: persist ONLY small numeric intermediates. Persisting the
-    # big text stage is a measured pessimization (columnar cache of 2.5M
-    # strings reads slower than recomputing the extraction inline — inline
-    # keeps the whole chain pipelined in one codegen pass per consumer).
-    _MULTI_CONSUMER = ("sigs",)
     results: dict[str, StageResult] = field(default_factory=dict)
 
     # -- checkpoint/lineage machinery ----------------------------------------
@@ -145,27 +136,18 @@ class KGPipeline:
         path = os.path.join(self.workdir, name)
         mpath = self._manifest_path(name)
         t0 = time.time()
-        # round-7 A/B at sf1.0 (min-of-2 fused walls, widened scans):
-        # persist 7.64s < inline 8.46s < parquet 9.98s — the columnar cache
-        # won once extraction went JVM-native and the scan was widened, so
-        # persist is now the default; env still selects the others.
-        extract_mat = os.environ.get("SPARK_GRAFT_EXTRACT_MAT", "persist")
-        fused_inline = {"triples"} if extract_mat != "parquet" else {"triples", "extracted"}
-        if not self.checkpoint_stages and name not in fused_inline:
-            # fused: no materialization, except persisting small numeric
-            # multi-consumer frames. 'extracted' (big text, 4 consumers)
-            # materialization strategy is measured, not assumed —
-            # SPARK_GRAFT_EXTRACT_MAT selects parquet round-trip (default;
-            # was fastest with the pandas-UDF extractor), persist
-            # (MEMORY_AND_DISK columnar cache; single-box disk write drops
-            # out), or inline (recompute per consumer; viable now the
-            # native extractor is pure codegen JVM regex).
+        if not self.checkpoint_stages and name != "triples":
+            # fused: no parquet; the multi-consumer frames are persisted.
+            # 'sigs' (small, numeric) lazily.  'extracted' (big text, 4
+            # consumers) is also counted once, under its own wall: the
+            # round-7 sf1.0 A/B (min-of-2 fused walls) measured persist
+            # 7.64 s against 8.46 s recomputing it per consumer and 9.98 s
+            # for a parquet round-trip.
             df = compute()
-            if name in self._MULTI_CONSUMER:
+            if name in ("sigs", "extracted"):
                 df = df.persist()
-            elif name == "extracted" and extract_mat == "persist":
-                df = df.persist()
-                df.count()  # materialize once, under this stage's wall
+            if name == "extracted":
+                df.count()
             self.results[name] = StageResult(name, "", fp, False, time.time() - t0, None)
             return df
         if self.resume and os.path.exists(mpath):
@@ -209,21 +191,6 @@ class KGPipeline:
 
     # -- stages ---------------------------------------------------------------
 
-    def _parallel(self, jobs: dict[str, tuple]) -> dict[str, DataFrame]:
-        """Run independent stages concurrently — Spark's scheduler interleaves
-        their jobs across the executor pool, amortizing per-stage fixed costs
-        (write/read-back/lineage). Falls back to sequential when disabled."""
-        if not self.parallel_stages or len(jobs) == 1:
-            return {n: self.stage(n, up, fn, **kw) for n, (up, fn, kw) in jobs.items()}
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-            futs = {
-                n: pool.submit(self.stage, n, up, fn, **kw)
-                for n, (up, fn, kw) in jobs.items()
-            }
-            return {n: f.result() for n, f in futs.items()}
-
     def run(self) -> DataFrame:
         from rdflib_r2r_spark.session import widen_scan
 
@@ -241,30 +208,23 @@ class KGPipeline:
             ),
         )
 
-        branch = self._parallel(
-            {
-                "base_triples": (
-                    ["extracted"],
-                    lambda: SparkMappingCompiler(spark, {"pages": extracted}).compile(
-                        [pages_triples_map()]
-                    ),
-                    {},
-                ),
-                "alias_dict": (
-                    ["extracted"],
-                    lambda: men.build_alias_dict(extracted, size=self.dict_size),
-                    {},
-                ),
-                "sigs": (
-                    ["extracted"],
-                    lambda: linking.signatures(extracted, num_hashes=self.num_hashes),
-                    {},
-                ),
-            }
+        base_triples = self.stage(
+            "base_triples",
+            ["extracted"],
+            lambda: SparkMappingCompiler(spark, {"pages": extracted}).compile(
+                [pages_triples_map()]
+            ),
         )
-        base_triples = branch["base_triples"]
-        alias_dict = branch["alias_dict"]
-        sigs = branch["sigs"]
+        alias_dict = self.stage(
+            "alias_dict",
+            ["extracted"],
+            lambda: men.build_alias_dict(extracted, size=self.dict_size),
+        )
+        sigs = self.stage(
+            "sigs",
+            ["extracted"],
+            lambda: linking.signatures(extracted, num_hashes=self.num_hashes),
+        )
 
         # minhash signatures are checkpointed above, so the candidate
         # self-join and verification read parquet instead of re-hashing
@@ -279,29 +239,23 @@ class KGPipeline:
             ),
         )
 
-        branch2 = self._parallel(
-            {
-                "mentions": (
-                    ["extracted", "alias_dict"],
-                    # fast path: per-row array_intersect against the inlined
-                    # dict — no 100-tokens-per-doc explode row blowup; emits
-                    # the distinct (url, entity_id) pair set directly
-                    lambda: men.mention_entities(extracted, alias_dict),
-                    {},
-                ),
-                "canon": (
-                    ["edges"],
-                    # hops=3: near-dup clusters are shallow; 3 min-propagation
-                    # hops per checkpointed round covers diameter 3 in ONE
-                    # barrier (measured 3.7s vs 4.4s at hops=2 on the rep500
-                    # edge set) — the barrier count is the serial term
-                    lambda: components.canonical_map(edges, hops_per_round=3),
-                    {},
-                ),
-            }
+        # fast path: per-row array_intersect against the inlined dict — no
+        # 100-tokens-per-doc explode row blowup; emits the distinct
+        # (url, entity_id) pair set directly
+        mention_rows = self.stage(
+            "mentions",
+            ["extracted", "alias_dict"],
+            lambda: men.mention_entities(extracted, alias_dict),
         )
-        mention_rows = branch2["mentions"]
-        canon = branch2["canon"]
+        # hops=3: near-dup clusters are shallow; 3 min-propagation hops per
+        # checkpointed round covers diameter 3 in ONE barrier (measured 3.7s
+        # vs 4.4s at hops=2 on the rep500 edge set) — the barrier count is
+        # the serial term
+        canon = self.stage(
+            "canon",
+            ["edges"],
+            lambda: components.canonical_map(edges, hops_per_round=3),
+        )
 
         nb = self.num_buckets
 

@@ -1,10 +1,11 @@
-"""Mention detection + entity linking against a broadcast alias dictionary.
+"""Mention detection + entity linking against a small alias dictionary.
 
-All tokenization is Spark SQL built-ins (split/posexplode — JVM-side); the
-alias dictionary is tiny by construction and joined with an explicit
-``F.broadcast`` hint (north_star: "batched mention detection and entity-link
-scoring ... plus a broadcast alias dictionary"), so mention detection is a
-map-only stage with zero shuffle for the join itself.
+All tokenization is Spark SQL built-ins (split/explode — JVM-side).  The
+alias dictionary is tiny by construction, so ``mention_entities`` inlines
+it into a per-row expression, or joins it with an explicit ``F.broadcast``
+hint once it is too big to inline (north_star: "batched mention detection
+and entity-link scoring ... plus a broadcast alias dictionary"); either way
+mention detection is a map-only stage with zero shuffle for the lookup.
 """
 
 from __future__ import annotations
@@ -16,17 +17,6 @@ TOKEN_SPLIT_RE = "[^a-z0-9]+"
 DEFAULT_DICT_SIZE = 24
 MIN_ALIAS_LEN = 4
 ENTITY_BASE = "http://ex.org/entity/"
-
-
-def tokens_df(pages: DataFrame, text_col: str = "text", key_col: str = "url") -> DataFrame:
-    """(key, pos, token) — lowercased, non-alphanumeric-delimited tokens."""
-    return (
-        pages.select(
-            F.col(key_col).alias("key"),
-            F.posexplode(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE)).alias("pos", "token"),
-        )
-        .filter(F.col("token") != "")
-    )
 
 
 def build_alias_dict(
@@ -82,23 +72,6 @@ def build_alias_dict(
     )
 
 
-def detect_mentions(pages: DataFrame, alias_dict: DataFrame,
-                    text_col: str = "text", key_col: str = "url") -> DataFrame:
-    """(url, mention, pos, entity_id, prior): every token occurrence that
-    matches an alias. Broadcast hash join — no shuffle of the corpus side."""
-    tok = tokens_df(pages, text_col, key_col)
-    return (
-        tok.join(F.broadcast(alias_dict), tok["token"] == alias_dict["alias"], "inner")
-        .select(
-            F.col("key").alias("url"),
-            F.col("token").alias("mention"),
-            F.col("pos"),
-            F.col("entity_id"),
-            F.col("prior"),
-        )
-    )
-
-
 def mention_triples(mentions: DataFrame, pre_deduped: bool = False) -> DataFrame:
     """Distinct (doc, ex:mentions, entity) triples in the engine's term
     encoding.  Late IRI rendering: the distinct shuffles the RAW
@@ -128,19 +101,19 @@ def mention_triples(mentions: DataFrame, pre_deduped: bool = False) -> DataFrame
 def mention_entities(pages: DataFrame, alias_dict: DataFrame,
                      text_col: str = "text", key_col: str = "url",
                      max_inline: int = 512) -> DataFrame:
-    """Distinct (url, entity_id) pairs — the pipeline's mention fast path.
+    """Distinct (url, entity_id) pairs: every document that mentions an
+    alias, linked to that alias's entity.
 
-    detect_mentions explodes EVERY token into its own row (url duplicated
-    per token) before the broadcast join; for N docs x ~100 tokens that is
-    a 100N-row intermediate just to find ~0.3N matches.  The alias dict is
-    bounded by construction (``size`` param), so inline it as an array
-    literal and map tokens to entities per row: ``array_intersect(tokens,
-    aliases)`` dedups matched ALIASES within the doc, then
-    ``array_distinct(transform(.., amap))`` dedups the mapped ENTITY ids —
-    so the pairs stay distinct even when several aliases link to one entity
-    (alias->entity need not be injective) — and emits ONLY matches: no
-    token explode, no join, no extra shuffle, pure whole-stage codegen.
-    Falls back to the join path if the dict exceeds ``max_inline``.
+    The alias dict is bounded by construction (``size`` param), so inline
+    it as an array literal and map tokens to entities per row:
+    ``array_intersect(tokens, aliases)`` dedups matched ALIASES within the
+    doc, then ``array_distinct(transform(.., amap))`` dedups the mapped
+    ENTITY ids — so the pairs stay distinct even when several aliases link
+    to one entity (alias->entity need not be injective) — and emits ONLY
+    matches: no token explode, no join, no extra shuffle, pure whole-stage
+    codegen.  A dict larger than ``max_inline`` takes a broadcast hash join
+    against one row per token instead (no shuffle of the corpus side, then
+    a distinct).
     MEASURED (sf0.1 corpus, local[32], min-of-3 noop-sink walls): the
     broadcast join is FLAT at ~0.4s from 128 to 32k entries while the
     inline literal degrades linearly once the expression tree dominates —
@@ -148,8 +121,6 @@ def mention_entities(pages: DataFrame, alias_dict: DataFrame,
     0.42 (crossover); 8192: 5.2 / 0.41; 32768: 23.3 / 0.42.  The default
     sits at 512, comfortably on the winning side of the crossover;
     real alias dictionaries (thousands of entries) take the join path.
-    Position/prior attribution stays on detect_mentions — this path feeds
-    mention_triples, which only needs the distinct pair set.
     """
     rows = alias_dict.select("alias", "entity_id").collect()
     if not rows:
@@ -162,17 +133,18 @@ def mention_entities(pages: DataFrame, alias_dict: DataFrame,
                 F.lit(None).cast("long").alias("entity_id"),
             ).limit(0)
         )
+    toks = F.filter(
+        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != ""
+    )
     if len(rows) > max_inline:
+        tok = pages.select(F.col(key_col).alias("url"), F.explode(toks).alias("token"))
         return (
-            detect_mentions(pages, alias_dict, text_col, key_col)
+            tok.join(F.broadcast(alias_dict), tok["token"] == alias_dict["alias"], "inner")
             .select("url", "entity_id").distinct()
         )
     aliases = F.array(*[F.lit(r["alias"]) for r in rows])
     amap = F.create_map(
         *[x for r in rows for x in (F.lit(r["alias"]), F.lit(int(r["entity_id"])))]
-    )
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != ""
     )
     ents = F.array_distinct(
         F.transform(F.array_intersect(toks, aliases), lambda t: amap[t])

@@ -5,7 +5,6 @@ pure-Python reference emission, and checkpoint-resume semantics.
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -66,8 +65,9 @@ def test_alias_dict_and_mentions_match_reference(spark, docs, docs_pd):
     want = {(a, i) for a, i in ref.alias_dict_py(texts).items()}
     assert got == want
 
-    mentions = men.detect_mentions(pages, adict)
-    got_m = {(r["url"], r["entity_id"]) for r in mentions.select("url", "entity_id").distinct().collect()}
+    mentions = men.mention_entities(pages, adict).collect()
+    got_m = {(r["url"], r["entity_id"]) for r in mentions}
+    assert len(got_m) == len(mentions)  # already a distinct pair set
     aliases = ref.alias_dict_py(texts)
     want_m = {
         (url, aliases[t])
@@ -199,45 +199,33 @@ def test_numeric_band_values_give_same_candidates(spark, docs):
     sigs.unpersist()
 
 
-def test_fused_edges_match_staged(spark, docs):
-    """The single-exchange sig-carrying band join must produce the exact
-    edge set of the staged candidate_pairs + verified_edges flow."""
-    pages = pg.pages_from_documents(docs)
-    fused = {(r["a"], r["b"], round(r["sim_est"], 6))
-             for r in linking.near_dup_edges(pages, fused=True).collect()}
-    staged = {(r["a"], r["b"], round(r["sim_est"], 6))
-              for r in linking.near_dup_edges(pages, fused=False).collect()}
-    assert fused == staged and len(fused) > 0
+# (html bytes, expected text): malformed UTF-8, script/style, article vs
+# body.  Expected strings are written out, not derived from any extractor.
+EXTRACTOR_GOLDEN = [
+    (b"<html><head><style>a{}</style></head><body>x <i>y</i> &amp;&lt;</body></html>",
+     "x y &<"),
+    (b"<body><article>first</article><article>second</article></body>", "first"),
+    (b"no tags at all", "no tags at all"),
+    (b"<script>only script</script>", ""),
+    (b"<body><SCRIPT a=b>nested <b>tag</b></SCRIPT>kept</body>", "kept"),
+    ("<body>unicode é中文</body>".encode("utf-8"), "unicode é中文"),
+    # invalid UTF-8: 0xFF can begin no sequence, 0xC3 is truncated; each
+    # decodes to U+FFFD
+    (b"<body>bad \xff byte and truncated \xc3</body>",
+     "bad \ufffd byte and truncated \ufffd"),
+    # an <article> with no closing tag is not an article: fall back to body
+    (b"<p>x</p><body>y</body><article>z", "y"),
+]
 
 
-def test_native_extractor_matches_pandas(spark, docs):
-    """The JVM-native extractor is BYTE-IDENTICAL to the Arrow-UDF path on
-    the full corpus plus adversarial HTML — this equality is what lets the
-    pipeline run extraction with zero Python workers."""
-    from rdflib_r2r_spark.web.extract import extract_text_native, extract_text_pandas
-
-    pages = pg.pages_from_documents(docs)
-    messy = spark.createDataFrame(
-        [
-            (b"<html><head><style>a{}</style></head><body>x <i>y</i> &amp;&lt;</body></html>",),
-            (b"<body><article>first</article><article>second</article></body>",),
-            (b"no tags at all",),
-            (b"<script>only script</script>",),
-            (b"<body><SCRIPT a=b>nested <b>tag</b></SCRIPT>kept</body>",),
-            ("<body>unicode é中文</body>".encode("utf-8"),),
-            # invalid UTF-8: 0xFF can begin no sequence, 0xC3 is truncated.
-            # JVM cast and pd decode(errors="replace") must both map each
-            # to U+FFFD, not crash the Python path.
-            (b"<body>bad \xff byte and truncated \xc3</body>",),
-        ],
-        "html binary",
-    ).select(F.col("html"))
-    for frame in (pages.select("html"), messy):
-        both = frame.select(
-            extract_text_native(F.col("html")).alias("nat"),
-            extract_text_pandas(F.col("html")).alias("pd"),
-        )
-        diff = both.filter(
-            ~F.col("nat").eqNullSafe(F.col("pd"))
-        ).count()
-        assert diff == 0
+def test_extractor_golden_bytes(spark):
+    """The extractor emits exactly the spec's bytes on adversarial HTML, and
+    the pure-Python twin agrees."""
+    df = spark.createDataFrame(
+        [(i, html) for i, (html, _) in enumerate(EXTRACTOR_GOLDEN)], "i int, html binary"
+    )
+    got = {r["i"]: r["text"]
+           for r in df.select("i", extract_text(F.col("html")).alias("text")).collect()}
+    for i, (html, want) in enumerate(EXTRACTOR_GOLDEN):
+        assert got[i] == want, (html, got[i])
+        assert ref.extract_text_py(html.decode("utf-8", errors="replace")) == want
