@@ -10,8 +10,8 @@ rdflib_r2r/analyze_failures.py:68-173).
 
 This is the Spark-native twin: conversion compiles the query to a DataFrame
 plan (the engine's "SQL text" is Catalyst's explain output), and execution
-runs ``limit(cap).collect()`` under a cancellable job group so a timeout
-kills the Spark job rather than abandoning a thread.
+runs ``limit(cap).collect()`` under a per-query job tag so a timeout
+kills the Spark jobs rather than abandoning a thread.
 """
 
 from __future__ import annotations
@@ -74,28 +74,35 @@ def time_queries(
 
     Mutates and returns ``reports``; ``done`` makes the sweep resumable the
     way the reference's ``results``/``done_ids`` contract does.  Timeouts
-    cancel the underlying Spark job group (not just the Python wait), so a
-    runaway query does not keep burning executor time.
+    interrupt every Spark job of the query (not just the Python wait), so a
+    runaway query does not keep burning executor time into the next one.
+    The worker's jobs carry a job tag (``SparkContext.addJobTag``; AQE's
+    follow-up jobs inherit it), and the cancel repeats until the worker
+    exits: a single ``cancelJobGroup`` fired while the query was still
+    compiling cancelled nothing and left its jobs running into the next
+    query.
     """
     from pyspark import InheritableThread
 
-    spark = store.spark
+    sc = store.spark.sparkContext
     done = set() if done is None else done
     for rep in reports:
         if rep.index in done or rep.status != "Success":
             continue
-        group = f"analyze-{rep.index}-{time.time_ns()}"
+        tag = f"analyze-{rep.index}-{time.time_ns()}"
         result: dict = {}
 
-        def run(rep=rep, group=group, result=result):
+        def run(rep=rep, tag=tag, result=result):
+            sc.setInterruptOnCancel(True)
+            sc.addJobTag(tag)
             try:
-                spark.sparkContext.setJobGroup(group, "analyze.time_queries",
-                                               interruptOnCancel=True)
                 rows = store.query(rep.sparql).limit(fetch_cap).collect()
                 result["rows"] = rows
             except Exception as e:
                 result["error"] = f"{type(e).__name__}: {e}"
                 result["trace"] = traceback.format_exc()
+            finally:
+                sc.removeJobTag(tag)
 
         t0 = time.time()
         worker = InheritableThread(target=run, daemon=True)
@@ -103,10 +110,15 @@ def time_queries(
         worker.join(timeout_s)
         rep.seconds = round(time.time() - t0, 3)
         if worker.is_alive():
-            spark.sparkContext.cancelJobGroup(group)
-            worker.join(10.0)
+            # the budget can run out while the query is still compiling, so
+            # its jobs may start after a first interrupt: repeat until the
+            # worker exits
+            deadline = time.time() + 10.0
+            while worker.is_alive() and time.time() < deadline:
+                sc.cancelJobsWithTag(tag)
+                worker.join(0.2)
             rep.timed_out = True
-            rep.exec_error = f"timeout after {timeout_s}s (job group cancelled)"
+            rep.exec_error = f"timeout after {timeout_s}s (jobs interrupted)"
         elif "error" in result:
             rep.exec_error = result["error"]
         else:

@@ -12,55 +12,24 @@ CAST(x AS STRING) in both Spark and DuckDB:
 - ``xsd:dateTime``: a ``T`` between date and time — both engines CAST with a
   space (TC0016b/c).
 
-Each transform ships as a synchronized twin: a Spark ``Column`` builder and a
-portable SQL-text builder that evaluates identically on Spark AND DuckDB
-(STRING alias, instr/substr/regexp_replace subset common to both).  Both
-operate on the engine's CAST-to-string output, which for doubles is the
-shortest round-trip representation in either engine — the digit sequence is
-therefore identical across engines even when the notation differs
-(Java prints ``1.0E7`` where DuckDB prints ``10000000.0``), so the
-canonicalized forms agree.
+Each transform is ONE portable SQL-text builder that evaluates identically
+on Spark AND DuckDB (STRING alias, instr/substr/regexp_replace subset common
+to both): the Spark compiler parses it through ``F.expr``, the DuckDB oracle
+runs it verbatim.  It operates on the engine's CAST-to-string output, which
+for doubles is the shortest round-trip representation in either engine —
+the digit sequence is therefore identical across engines even when the
+notation differs (Java prints ``1.0E7`` where DuckDB prints
+``10000000.0``), so the canonicalized forms agree.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 
 # -- xsd:double ---------------------------------------------------------------
 
-def canonical_double_col(col: Column) -> Column:
-    """Spark: canonical xsd:double lexical of a double/float column."""
-    s = col.cast("string")
-    neg = F.when(s.startswith("-"), F.lit("-")).otherwise(F.lit(""))
-    u = F.upper(F.when(s.startswith("-"), s.substr(F.lit(2), F.length(s))).otherwise(s))
-    epos = F.instr(u, "E")
-    mant = F.when(epos > 0, u.substr(F.lit(1), epos - 1)).otherwise(u)
-    exp0 = F.when(epos > 0, u.substr(epos + 1, F.length(u)).cast("int")).otherwise(F.lit(0))
-    dpos = F.instr(mant, ".")
-    ip = F.when(dpos > 0, mant.substr(F.lit(1), dpos - 1)).otherwise(mant)
-    digits = F.replace(mant, F.lit("."), F.lit(""))
-    stripped = F.regexp_replace(digits, "^0+", "")
-    k = F.length(digits) - F.length(stripped) + 1
-    e = (exp0 + F.length(ip) - k).cast("int")
-    first = stripped.substr(F.lit(1), F.lit(1))
-    rest0 = F.regexp_replace(stripped.substr(F.lit(2), F.length(stripped)), "0+$", "")
-    frac = F.when(rest0 == "", F.lit("0")).otherwise(rest0)
-    main = F.concat(neg, first, F.lit("."), frac, F.lit("E"), e.cast("string"))
-    return (
-        F.when(s.isNull(), F.lit(None).cast("string"))
-        .when(s.isin("Infinity", "inf", "INF"), F.lit("INF"))
-        .when(s.isin("-Infinity", "-inf", "-INF"), F.lit("-INF"))
-        .when(s.isin("NaN", "nan"), F.lit("NaN"))
-        .when(stripped == "", F.concat(neg, F.lit("0.0E0")))
-        .otherwise(main)
-    )
-
-
 def canonical_double_sql(x: str) -> str:
     """Portable (Spark+DuckDB) SQL: canonical xsd:double lexical of the
-    numeric expression ``x``.  Mirrors :func:`canonical_double_col`."""
+    numeric expression ``x``."""
     s = f"(CAST({x} AS STRING))"
     neg = f"(CASE WHEN {s} LIKE '-%' THEN '-' ELSE '' END)"
     u = f"(upper(CASE WHEN {s} LIKE '-%' THEN substr({s}, 2) ELSE {s} END))"
@@ -106,10 +75,6 @@ def column_types_for_canonical(schema) -> dict[str, str]:
 
 # -- xsd:dateTime -------------------------------------------------------------
 
-def canonical_datetime_col(col: Column) -> Column:
-    """Spark: canonical xsd:dateTime lexical (``T`` separator)."""
-    return F.replace(col.cast("string"), F.lit(" "), F.lit("T"))
-
-
 def canonical_datetime_sql(x: str) -> str:
+    """Portable SQL: canonical xsd:dateTime lexical (``T`` separator)."""
     return f"(replace(CAST({x} AS STRING), ' ', 'T'))"

@@ -36,16 +36,18 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from rdflib_r2r_spark import terms
-from rdflib_r2r_spark.canonical import canonical_datetime_col, canonical_double_col
+from rdflib_r2r_spark.canonical import canonical_datetime_sql, canonical_double_sql
 from rdflib_r2r_spark.mapping import (
     LogicalSource,
     TermMap,
     TriplesMap,
     xsd_for_spark_type,
 )
-from rdflib_r2r_spark.templates import template_to_column, template_to_spark_expr
+from rdflib_r2r_spark.templates import sql_str_lit, template_to_sql
+from rdflib_r2r_spark.terms import iri_safe_sql_spark
 
 TRIPLE_COLS = ["subj", "pred", "obj", "obj_dt", "obj_lang", "graph"]
 
@@ -54,8 +56,82 @@ class MappingError(ValueError):
     pass
 
 
+NULL_STR_SQL = "CAST(NULL AS STRING)"
+# R2RML NULL guard on an output triple
+_NOT_NULL_SPO = "subj IS NOT NULL AND pred IS NOT NULL AND obj IS NOT NULL"
+
+# R2RML §7.4: a column IRI value is absolute iff it starts with a scheme
+_ABSOLUTE_IRI_RX = "^[A-Za-z][A-Za-z0-9+.-]*:"
+
+
 def _null_str() -> Column:
-    return F.lit(None).cast("string")
+    return F.expr(NULL_STR_SQL)
+
+
+def backtick(*parts: str) -> str:
+    """Spark-SQL identifier text: ``a``.``b`` with embedded backticks doubled."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+
+
+def _term_sql(tm: TermMap, position: str, qualify, schema_types: dict) -> tuple[str, str, str]:
+    """SQL text of :meth:`SparkMappingCompiler.term_columns`."""
+    ttype = tm.inferred_term_type(position)
+    dt = sql_str_lit(tm.datatype) if tm.datatype else NULL_STR_SQL
+    lang = sql_str_lit(tm.language) if tm.language else NULL_STR_SQL
+
+    def q(c: str) -> str:
+        # binary columns render as uppercase hex (xsd:hexBinary lexical)
+        if isinstance(schema_types.get(c), T.BinaryType):
+            return f"hex({qualify(c)})"
+        return qualify(c)
+
+    if tm.constant is not None:
+        if ttype == "RawIRI":  # pre-rendered lexical (chain predicates)
+            return sql_str_lit(tm.constant), NULL_STR_SQL, NULL_STR_SQL
+        if ttype == "IRI":
+            return sql_str_lit(terms.wrap_iri(tm.constant)), NULL_STR_SQL, NULL_STR_SQL
+        if ttype == "BlankNode":
+            return sql_str_lit("_:" + tm.constant), NULL_STR_SQL, NULL_STR_SQL
+        return sql_str_lit(tm.constant), dt, lang
+
+    if tm.column is not None:
+        val = f"CAST({q(tm.column)} AS STRING)"
+        if ttype == "IRI":
+            # rr:termType rr:IRI on a column: value IS the IRI (no
+            # encoding); RELATIVE values resolve against the mapping base
+            # (R2RML §7.4), absolute ones pass through
+            if tm.base_iri:
+                val = (
+                    f"(CASE WHEN {val} RLIKE '{_ABSOLUTE_IRI_RX}' THEN {val} "
+                    f"ELSE concat({sql_str_lit(tm.base_iri)}, {val}) END)"
+                )
+            return f"concat('<', {val}, '>')", NULL_STR_SQL, NULL_STR_SQL
+        if ttype == "BlankNode":
+            return f"concat('_:', {iri_safe_sql_spark(q(tm.column))})", NULL_STR_SQL, NULL_STR_SQL
+        if tm.datatype is None:
+            inferred = xsd_for_spark_type(schema_types[tm.column]) if tm.column in schema_types else None
+            dt = sql_str_lit(inferred) if inferred else NULL_STR_SQL
+        # natural RDF lexical form = canonical XSD lexical of the column
+        # VALUE (R2RML §10.2; W3C TC0005a/b, TC0012a/e, TC0016b/c) —
+        # doubles render scientific (2.0E1), dateTimes get the 'T'
+        src_t = schema_types.get(tm.column)
+        if isinstance(src_t, (T.DoubleType, T.FloatType)):
+            return canonical_double_sql(q(tm.column)), dt, lang
+        if isinstance(src_t, T.TimestampType):
+            return canonical_datetime_sql(q(tm.column)), dt, lang
+        return val, dt, lang
+
+    if tm.template is not None:
+        def render(iri: bool, wrap: bool) -> str:
+            return template_to_sql(tm.template, q, iri=iri, wrap=wrap,
+                                   safe=iri_safe_sql_spark)
+        if ttype == "IRI":
+            return render(True, True), NULL_STR_SQL, NULL_STR_SQL
+        if ttype == "BlankNode":
+            return f"concat('_:', {render(True, False)})", NULL_STR_SQL, NULL_STR_SQL
+        return render(False, False), dt, lang
+
+    raise MappingError(f"term map has no constant/column/template: {tm}")
 
 
 class SparkMappingCompiler:
@@ -72,24 +148,45 @@ class SparkMappingCompiler:
             raise MappingError(f"unknown strategy {strategy!r}")
         self.strategy = strategy
         self.broadcast_parents = broadcast_parents
+        # LogicalSource.key() -> (DataFrame, {column: DataType}); every query
+        # compiled against this compiler shares one analyzed source plan
+        self._sources: dict[str, tuple[DataFrame, dict]] = {}
 
     # -- sources ------------------------------------------------------------
 
     def register(self, name: str, df: DataFrame) -> None:
         self.tables[name] = df
+        self._sources.clear()
 
     def source_df(self, source: LogicalSource) -> DataFrame:
         """rr:tableName -> registered/catalog table; rr:sqlQuery -> Spark SQL
-        view (reference: rdflib_r2r/r2r_mapping.py:28-40 ``_get_table``)."""
+        view (reference: rdflib_r2r/r2r_mapping.py:28-40 ``_get_table``).
+
+        Memoized per ``source.key()`` until the next :meth:`register`: a
+        sqlQuery source otherwise re-registers every temp view and
+        re-analyzes its SQL on every fresh SPARQL request."""
+        key = source.key()
+        hit = self._sources.get(key)
+        if hit is not None:
+            return hit[0]
         if source.table is not None:
             if source.table in self.tables:
-                return self.tables[source.table]
-            return self.spark.table(source.table)
-        if source.sql_query is not None:
-            for name, df in self.tables.items():
-                df.createOrReplaceTempView(name)
-            return self.spark.sql(source.sql_query)
-        raise MappingError("logical source needs table or sql_query")
+                df = self.tables[source.table]
+            else:
+                df = self.spark.table(source.table)
+        elif source.sql_query is not None:
+            for name, tdf in self.tables.items():
+                tdf.createOrReplaceTempView(name)
+            df = self.spark.sql(source.sql_query)
+        else:
+            raise MappingError("logical source needs table or sql_query")
+        self._sources[key] = (df, {f.name: f.dataType for f in df.schema.fields})
+        return df
+
+    def source_types(self, source: LogicalSource) -> dict:
+        """{column: Spark DataType} of :meth:`source_df` (memoized with it)."""
+        self.source_df(source)
+        return self._sources[source.key()][1]
 
     # -- term maps ----------------------------------------------------------
 
@@ -97,98 +194,25 @@ class SparkMappingCompiler:
         self,
         tm: TermMap,
         position: str,
-        resolve,
+        qualify,
         schema_types: dict,
-        sql_qualify=None,
     ) -> tuple[Column, Column, Column]:
         """(lexical, datatype, language) Columns for one term map.
 
         Mirrors the constant/column/template dispatch of
         ``match_node_to_term_map`` (reference: rdflib_r2r/sql_converter.py:81-176).
 
-        ``sql_qualify(colname) -> str`` (optional) enables the one-Py4J-call
-        template fast path (templates.template_to_spark_expr): callers whose
-        source columns are SQL-addressable (aliased scans) pass it so a
-        template render costs one ``F.expr`` parse instead of ~100 gateway
-        round trips.  Semantics are identical (parity-pinned).
+        ``qualify(colname) -> str`` returns the Spark-SQL text addressing a
+        source column (a backticked name, ``alias``.``col``, or a raw shadow
+        name).  Every branch renders as SQL text, so each term costs one
+        ``F.expr`` parse instead of a Column-API chain of Py4J round trips
+        (the iri-safe chain alone is hundreds).  The text is the Spark
+        flavour of ``oracle.term_sql``: same bytes per row, with the
+        RLIKE-gated percent encoder (terms.iri_safe_sql_spark) and RLIKE in
+        place of DuckDB's regexp_matches.
         """
-        from pyspark.sql import types as T
-
-        raw_resolve = resolve
-
-        def resolve(c):  # noqa: F811 - binary columns render as uppercase hex
-            col = raw_resolve(c)
-            if isinstance(schema_types.get(c), T.BinaryType):
-                return F.hex(col)  # natural RDF lexical of binary (xsd:hexBinary)
-            return col
-
-        raw_qualify = sql_qualify
-
-        if raw_qualify is not None:
-            def sql_qualify(c):  # noqa: F811 - same hex wrapper, SQL flavor
-                s = raw_qualify(c)
-                if isinstance(schema_types.get(c), T.BinaryType):
-                    return f"hex({s})"
-                return s
-
-        ttype = tm.inferred_term_type(position)
-        dt = F.lit(tm.datatype).cast("string") if tm.datatype else _null_str()
-        lang = F.lit(tm.language).cast("string") if tm.language else _null_str()
-
-        if tm.constant is not None:
-            if ttype == "RawIRI":  # pre-rendered lexical (chain predicates)
-                return F.lit(tm.constant), _null_str(), _null_str()
-            if ttype == "IRI":
-                return F.lit(terms.wrap_iri(tm.constant)), _null_str(), _null_str()
-            if ttype == "BlankNode":
-                return F.lit("_:" + tm.constant), _null_str(), _null_str()
-            return F.lit(tm.constant), dt, lang
-
-        if tm.column is not None:
-            col = resolve(tm.column)
-            if ttype == "IRI":
-                # rr:termType rr:IRI on a column: value IS the IRI (no
-                # encoding); RELATIVE values resolve against the mapping base
-                # (R2RML §7.4), absolute ones pass through
-                val = col.cast("string")
-                if tm.base_iri:
-                    val = F.when(
-                        val.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"), val
-                    ).otherwise(F.concat(F.lit(tm.base_iri), val))
-                return F.concat(F.lit("<"), val, F.lit(">")), _null_str(), _null_str()
-            if ttype == "BlankNode":
-                return F.concat(F.lit("_:"), terms.iri_safe_col(col)), _null_str(), _null_str()
-            if tm.datatype is None:
-                inferred = xsd_for_spark_type(schema_types[tm.column]) if tm.column in schema_types else None
-                dt = F.lit(inferred).cast("string") if inferred else _null_str()
-            # natural RDF lexical form = canonical XSD lexical of the column
-            # VALUE (R2RML §10.2; W3C TC0005a/b, TC0012a/e, TC0016b/c) —
-            # doubles render scientific (2.0E1), dateTimes get the 'T'
-            src_t = schema_types.get(tm.column)
-            if isinstance(src_t, (T.DoubleType, T.FloatType)):
-                return canonical_double_col(col), dt, lang
-            if isinstance(src_t, T.TimestampType):
-                return canonical_datetime_col(col), dt, lang
-            return col.cast("string"), dt, lang
-
-        if tm.template is not None:
-            if sql_qualify is not None:
-                render = lambda iri, wrap: template_to_spark_expr(  # noqa: E731
-                    tm.template, sql_qualify, iri=iri, wrap=wrap)
-            else:
-                render = lambda iri, wrap: template_to_column(  # noqa: E731
-                    tm.template, resolve, iri=iri, wrap=wrap)
-            if ttype == "IRI":
-                return render(True, True), _null_str(), _null_str()
-            if ttype == "BlankNode":
-                return (
-                    F.concat(F.lit("_:"), render(True, False)),
-                    _null_str(),
-                    _null_str(),
-                )
-            return render(False, False), dt, lang
-
-        raise MappingError(f"term map has no constant/column/template: {tm}")
+        lex, dt, lang = _term_sql(tm, position, qualify, schema_types)
+        return F.expr(lex), F.expr(dt), F.expr(lang)
 
     # -- arms ---------------------------------------------------------------
 
@@ -249,27 +273,23 @@ class SparkMappingCompiler:
             raise MappingError("no arms to compile")
         return reduce(lambda a, b: a.unionByName(b), parts)
 
-    def _schema_types(self, df: DataFrame) -> dict:
-        return {f.name: f.dataType for f in df.schema.fields}
-
     def _compile_scan_arms(self, arms) -> DataFrame:
         """All join-free arms over one logical source: ONE scan + explode."""
-        tmap0 = arms[0][0]
-        df = self.source_df(tmap0.source)
-        schema_types = self._schema_types(df)
-        resolve = lambda c: df[c]  # noqa: E731
+        source = arms[0][0].source
+        df = self.source_df(source)
+        schema_types = self.source_types(source)
 
         structs: list[Column] = []
         for tmap, pred, obj, g in arms:
-            subj, _, _ = self.term_columns(tmap.subject_map, "S", resolve, schema_types)
+            subj, _, _ = self.term_columns(tmap.subject_map, "S", backtick, schema_types)
             if pred is None:  # class arm
                 p = F.lit(terms.wrap_iri(terms.RDF_TYPE))
                 o, odt, olang = F.lit(terms.wrap_iri(obj.constant)), _null_str(), _null_str()
             else:
-                p, _, _ = self.term_columns(pred, "P", resolve, schema_types)
-                o, odt, olang = self.term_columns(obj, "O", resolve, schema_types)
+                p, _, _ = self.term_columns(pred, "P", backtick, schema_types)
+                o, odt, olang = self.term_columns(obj, "O", backtick, schema_types)
             gcol = (
-                self.term_columns(g, "G", resolve, schema_types)[0]
+                self.term_columns(g, "G", backtick, schema_types)[0]
                 if g is not None
                 else _null_str()
             )
@@ -288,9 +308,7 @@ class SparkMappingCompiler:
         else:
             parts = [df.select(*[s[c].alias(c) for c in TRIPLE_COLS]) for s in structs]
             out = reduce(lambda a, b: a.unionByName(b), parts)
-        return out.filter(
-            F.col("subj").isNotNull() & F.col("pred").isNotNull() & F.col("obj").isNotNull()
-        )
+        return out.filter(_NOT_NULL_SPO)
 
     def _compile_join_arm(self, tmap, pred, obj, g, by_name) -> DataFrame:
         """Referencing-object map: equi-join child->parent on
@@ -301,9 +319,11 @@ class SparkMappingCompiler:
         if parent_name not in by_name:
             raise MappingError(f"unknown parentTriplesMap {parent_name!r}")
         parent_tmap = by_name[parent_name]
-        child_df = self.source_df(tmap.source)
-        child_types = self._schema_types(child_df)
-        res_child = lambda c: child_df[c]  # noqa: E731
+        # both sides are aliased: child and parent can be the same (memoized)
+        # source DataFrame, and only the alias tells their columns apart
+        child_df = self.source_df(tmap.source).alias("__c")
+        child_types = self.source_types(tmap.source)
+        q_child = lambda c: backtick("__c", c)  # noqa: E731
 
         same_table = (
             not obj.join_conditions
@@ -311,30 +331,26 @@ class SparkMappingCompiler:
         )
         if same_table:
             # R2RML: no joinCondition + same logical table => same row, no join.
-            parent_types = child_types
-            subj, _, _ = self.term_columns(tmap.subject_map, "S", res_child, child_types)
-            o, _, _ = self.term_columns(parent_tmap.subject_map, "S", res_child, parent_types)
+            o, _, _ = self.term_columns(parent_tmap.subject_map, "S", q_child, child_types)
             joined = child_df
         else:
-            parent_src = self.source_df(parent_tmap.source)
-            parent_df = parent_src.alias("__p")
+            if not obj.join_conditions:
+                raise MappingError("cross-table referencing map needs joinCondition")
+            parent_df = self.source_df(parent_tmap.source).alias("__p")
             if self.broadcast_parents:
                 parent_df = F.broadcast(parent_df)
-            parent_types = self._schema_types(parent_src)
-            cond = None
-            for jc in obj.join_conditions:
-                c = child_df[jc.child] == parent_df[jc.parent]
-                cond = c if cond is None else (cond & c)
-            if cond is None:
-                raise MappingError("cross-table referencing map needs joinCondition")
-            res_parent = lambda c: parent_df[c]  # noqa: E731
-            subj, _, _ = self.term_columns(tmap.subject_map, "S", res_child, child_types)
-            o, _, _ = self.term_columns(parent_tmap.subject_map, "S", res_parent, parent_types)
-            joined = child_df.join(parent_df, cond, "inner")
+            parent_types = self.source_types(parent_tmap.source)
+            q_parent = lambda c: backtick("__p", c)  # noqa: E731
+            cond = " AND ".join(
+                f"{q_child(jc.child)} = {q_parent(jc.parent)}" for jc in obj.join_conditions
+            )
+            o, _, _ = self.term_columns(parent_tmap.subject_map, "S", q_parent, parent_types)
+            joined = child_df.join(parent_df, F.expr(cond), "inner")
 
-        p, _, _ = self.term_columns(pred, "P", res_child, child_types)
+        subj, _, _ = self.term_columns(tmap.subject_map, "S", q_child, child_types)
+        p, _, _ = self.term_columns(pred, "P", q_child, child_types)
         gcol = (
-            self.term_columns(g, "G", res_child, child_types)[0]
+            self.term_columns(g, "G", q_child, child_types)[0]
             if g is not None
             else _null_str()
         )
@@ -345,9 +361,7 @@ class SparkMappingCompiler:
             _null_str().alias("obj_dt"),
             _null_str().alias("obj_lang"),
             gcol.alias("graph"),
-        ).filter(
-            F.col("subj").isNotNull() & F.col("pred").isNotNull() & F.col("obj").isNotNull()
-        )
+        ).filter(_NOT_NULL_SPO)
 
 
 def terms_const_iri_typeobj(cls: str) -> TermMap:

@@ -101,6 +101,12 @@ def get_spark(
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
         .config("spark.ui.enabled", "false")
+        # pyspark wraps every DataFrame/Column/F.* call in a Python call-site
+        # capture that costs ~10 Py4J round trips per call (F.col: 13,
+        # col.cast: 11); compiling one SPARQL request builds thousands of
+        # such calls.  Off, analysis errors lose only the Python call site
+        # from their message.  Static conf: it must be set on the builder.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

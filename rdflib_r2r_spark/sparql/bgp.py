@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rdflib_r2r_spark import terms
-from rdflib_r2r_spark.compiler import SparkMappingCompiler
+from rdflib_r2r_spark.compiler import SparkMappingCompiler, backtick
 from rdflib_r2r_spark.mapping import TermMap, TriplesMap, xsd_for_spark_type
 from rdflib_r2r_spark.sparql.ast_nodes import BNodeT, IRI, Lit, Var
 from rdflib_r2r_spark.sparql.parser import RDF_TYPE, SparqlNotImplemented
@@ -120,6 +120,9 @@ class Slot:
     def col(self, name: str) -> Column:
         return F.col(f"{self.alias}.{name}")
 
+    def sql(self, name: str) -> str:
+        return backtick(self.alias, name)
+
 
 @dataclass
 class Occurrence:
@@ -141,19 +144,20 @@ class RawBinding:
     ``prov`` render identically, so raw equality <=> lexical equality
     (same template skeleton + same slot types; the injectivity argument is
     the template-aware raw-key join bgp-internal equality already relies
-    on, restricted further to integral/single-column slots so renders
-    cannot collide across slot boundaries).
+    on, restricted to one slot, or to integral slots with a non-digit in
+    every separator, so renders cannot collide across slot boundaries —
+    see :meth:`BGPCompiler._raw_binding`).
 
     ``cols``   — the raw shadow column names present in the frame's df.
     ``prov``   — hashable provenance key; equal prov => same render fn.
-    ``render`` — list of raw Columns (in ``cols`` order) ->
-                 (lex, dt, lang, num) Columns, byte-identical to the
-                 BGP-boundary render of the same raws.
+    ``render`` — () -> (lex, dt, lang, num) Columns over the ``cols``
+                 names, byte-identical to the BGP-boundary render of the
+                 same raws.
     """
 
     cols: tuple
     prov: tuple
-    render: object  # Callable[[list[Column]], tuple[Column, Column, Column, Column]]
+    render: object  # Callable[[], tuple[Column, Column, Column, Column]]
 
 
 _RAW_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -192,9 +196,6 @@ class BGPCompiler:
         self.compiler = compiler
         self.arms = enumerate_arms(tmaps)
         self._alias_n = 0
-        # one source DataFrame per logical source (sqlQuery sources parse
-        # once, not once per slot); slots alias it
-        self._source_cache: dict[str, DataFrame] = {}
 
     # -- candidate matching ---------------------------------------------------
 
@@ -300,12 +301,10 @@ class BGPCompiler:
     def _new_slot(self, source) -> Slot:
         self._alias_n += 1
         alias = f"bgp{self._alias_n}"
-        key = source.key()
-        if key not in self._source_cache:
-            self._source_cache[key] = self.compiler.source_df(source)
-        src = self._source_cache[key]
-        return Slot(alias=alias, df=src.alias(alias),
-                    types={f.name: f.dataType for f in src.schema.fields})
+        # the compiler memoizes one source DataFrame per logical source for
+        # the store's lifetime; slots alias it
+        return Slot(alias=alias, df=self.compiler.source_df(source).alias(alias),
+                    types=self.compiler.source_types(source))
 
     def _typed_lit(self, value: str, col: str, slot: Slot) -> Column:
         dtype = slot.types.get(col)
@@ -412,36 +411,21 @@ class BGPCompiler:
             return sa.col(ca) == sb.col(cb)
         return sa.col(ca).cast("string") == sb.col(cb).cast("string")
 
-    def _raw_null_guard(self, occ: Occurrence) -> Column | None:
-        """IS NOT NULL condition on the raw inputs of one term map, or None
-        when the term can never be NULL (constants)."""
+    def _raw_null_guards(self, occ: Occurrence) -> list[str]:
+        """IS NOT NULL conditions (SQL text) on the raw inputs of one term
+        map; none when the term can never be NULL (constants)."""
         tm = occ.tm
-        if tm.constant is not None:
-            return None
         if tm.column is not None:
-            return occ.slot.col(tm.column).isNotNull()
-        if tm.template is not None:
+            cols = [tm.column]
+        elif tm.template is not None:
             cols = [p.column for p in parse_template(tm.template) if p.column]
-            if not cols:
-                return None
-            cond = occ.slot.col(cols[0]).isNotNull()
-            for c in cols[1:]:
-                cond = cond & occ.slot.col(c).isNotNull()
-            return cond
-        # exotic term maps: fall back to the rendered lexical
-        lex, _, _ = self._render(occ)
-        return lex.isNotNull()
+        else:
+            cols = []
+        return [f"{occ.slot.sql(c)} IS NOT NULL" for c in cols]
 
     def _render(self, occ: Occurrence) -> tuple[Column, Column, Column]:
-        # slots are SQL-addressable aliased scans, so hand term_columns the
-        # sql_qualify fast path (template renders become one F.expr parse
-        # instead of ~100 Py4J round trips — bi4's compile was 2.1s, ~1.5s
-        # of it in these chains)
-        alias = occ.slot.alias
         return self.compiler.term_columns(
-            occ.tm, occ.position, lambda c: occ.slot.col(c), occ.slot.types,
-            sql_qualify=lambda c: f"`{alias}`.`" + c.replace("`", "``") + "`",
-        )
+            occ.tm, occ.position, occ.slot.sql, occ.slot.types)
 
     def _num_col(self, occ: Occurrence, lex: Column) -> Column:
         tm = occ.tm
@@ -568,12 +552,15 @@ class BGPCompiler:
             # all conditions between the same two components become ONE join
             # with an ANDed condition
             by_pair: dict[tuple, list] = {}
+            same: dict[str, list[Column]] = {}
             for sa, sb, cond in pending:
                 ra, rb = find(sa.alias), find(sb.alias)
                 if ra == rb:
-                    frames[ra] = frames[ra].filter(cond)
+                    same.setdefault(ra, []).append(cond)
                 else:
                     by_pair.setdefault(tuple(sorted((ra, rb))), []).append((sa, sb, cond))
+            for r, conds in same.items():
+                frames[r] = frames[r].filter(_and_all(conds))
             if not by_pair:
                 break
             # merge exactly one pair per round, then re-bucket (other pairs
@@ -596,7 +583,6 @@ class BGPCompiler:
 
         # project variables (first occurrence; all are condition-equal)
         out_cols: list[Column] = []
-        guards: list[Column] = []
         raws: dict[str, RawBinding] = {}
         for name, occs in occurrences.items():
             occ = occs[0]
@@ -622,15 +608,13 @@ class BGPCompiler:
         # a query never reads the lexical (e.g. aggregates over the numeric
         # shadow: the canonical-double render would otherwise be evaluated
         # per row just to feed this filter).
-        for (occ,) in null_guards:
-            g = self._raw_null_guard(occ)
-            if g is not None:
-                guards.append(g)
+        # All guards AND into ONE filter: one DataFrame op (one Catalyst
+        # analysis) per frame instead of one per guard.
+        guards = list(dict.fromkeys(
+            g for (occ,) in null_guards for g in self._raw_null_guards(occ)))
         if not out_cols:
             out_cols = [F.lit(1).alias("__one")]
-        out = df
-        for gcond in guards:
-            out = out.filter(gcond)
+        out = df.filter(" AND ".join(guards)) if guards else df
         return out.select(*out_cols), raws
 
     def _raw_binding(
@@ -640,19 +624,26 @@ class BGPCompiler:
         render is not provably injective from raw columns.
 
         Eligible: IRI template whose slots are all integral columns, or a
-        single integral/string column.  Integral multi-slot renders are
-        injective for any template (a digit string absorbs '-' only as a
-        leading sign, so a fixed separator cannot migrate across slot
-        boundaries); string slots are percent-encoded (injective) but only
-        single-slot, because an unencoded separator character inside a
-        string value could otherwise alias the separator.  Floating-point
-        slots are excluded outright: grouping normalizes -0.0/NaN while
-        their rendered lexicals stay distinct.
+        single integral/string column.  An integral slot renders as
+        ``-?[0-9]+``, so a multi-slot render is injective only when every
+        separator between two slots contains a character outside ``[0-9]``:
+        with an empty or digit-only separator, digits migrate across the
+        slot boundary (``{a}{b}`` renders (1,23) and (12,3) both as
+        ``123``; ``{a}1{b}`` renders (11,23) and (1,123) both as
+        ``11123``).  With a non-digit in every separator, a slot cannot end
+        at two different places: the digits between the two ends would
+        have to repeat the separator periodically, making it all digits.
+        String slots are percent-encoded (injective) but only single-slot,
+        because an unencoded separator character inside a string value
+        could otherwise alias the separator.  Floating-point slots are
+        excluded outright: grouping normalizes -0.0/NaN while their
+        rendered lexicals stay distinct.
         """
         tm, pos, slot = occ.tm, occ.position, occ.slot
         if tm.template is None or tm.inferred_term_type(pos) != "IRI":
             return None
-        all_slots = [p.column for p in parse_template(tm.template) if p.column]
+        parts = parse_template(tm.template)
+        all_slots = [p.column for p in parts if p.column]
         cols = list(dict.fromkeys(all_slots))
         # a repeated column would break the slot<->raw correspondence that
         # prov-based pairing relies on (arity is part of the provenance)
@@ -662,7 +653,11 @@ class BGPCompiler:
         if len(cols) == 1:
             ok = isinstance(types[0], _RAW_INTEGRAL + (T.StringType,))
         else:
-            ok = all(isinstance(t, _RAW_INTEGRAL) for t in types)
+            first = next(i for i, p in enumerate(parts) if p.column)
+            ok = all(isinstance(t, _RAW_INTEGRAL) for t in types) and all(
+                any(ch not in "0123456789" for ch in p.prefix)
+                for p in parts[first + 1:] if p.column
+            )
         if not ok:
             return None
         raw_names = tuple(f"{name}__raw{i}" for i in range(len(cols)))
@@ -673,18 +668,17 @@ class BGPCompiler:
         # Product{p_partkey} vs Product{l_partkey}) are raw-comparable.
         # This is templates_compatible's equivalence, narrowed to equal
         # slot types.
-        skeleton = tuple(p.prefix for p in parse_template(tm.template))
+        skeleton = tuple(p.prefix for p in parts)
         prov = ("tmpl", skeleton, tuple(t.simpleString() for t in types))
         types_by_name = dict(zip(cols, types))
+        raw_of = {c: backtick(rn) for c, rn in zip(cols, raw_names)}
         compiler = self.compiler
-        tmpl_cols = tuple(cols)
 
-        def render(raw_cols: list) -> tuple[Column, Column, Column, Column]:
-            by = dict(zip(tmpl_cols, raw_cols))
+        def render() -> tuple[Column, Column, Column, Column]:
             lex, dt, lang = compiler.term_columns(
-                tm, pos, lambda c: by[c], types_by_name
+                tm, pos, lambda c: raw_of[c], types_by_name
             )
-            return lex, dt, lang, F.lit(None).cast("double")
+            return lex, dt, lang, F.expr("CAST(NULL AS DOUBLE)")
 
         return (
             [(rn, slot.col(c)) for rn, c in zip(raw_names, cols)],

@@ -55,6 +55,17 @@ _NUMERIC_XSD = {
 SHADOWS = ("", "__dt", "__lang", "__num")
 
 
+def _rerender(df: DataFrame, raw_vars: dict) -> DataFrame:
+    """Re-render the term columns of raw-keyed vars from their raw shadows,
+    in ONE ``withColumns`` (one Catalyst analysis per frame)."""
+    if not raw_vars:
+        return df
+    cols: dict[str, Column] = {}
+    for v, rb in raw_vars.items():
+        cols.update(zip((v + s for s in SHADOWS), rb.render()))
+    return df.withColumns(cols)
+
+
 def encode_term(t) -> tuple[str | None, str | None, str | None]:
     """(lex, dt, lang) of a constant AST term in the engine's encoding."""
     if isinstance(t, IRI):
@@ -422,13 +433,7 @@ class Evaluator:
             # render is pruned; shadows are re-rendered per distinct row.
             if out.raw_vars:
                 drop_cols = [v + s for v in out.raw_vars for s in SHADOWS]
-                ddf = out.df.drop(*drop_cols).distinct()
-                for v, rb in out.raw_vars.items():
-                    lex, dt, lang, num = rb.render([F.col(c) for c in rb.cols])
-                    ddf = (ddf.withColumn(v, lex)
-                              .withColumn(f"{v}__dt", dt)
-                              .withColumn(f"{v}__lang", lang)
-                              .withColumn(f"{v}__num", num))
+                ddf = _rerender(out.df.drop(*drop_cols).distinct(), out.raw_vars)
                 out = BindingFrame(ddf, out.term_vars, out.native_vars,
                                    out.maybe_null, out.raw_vars)
             else:
@@ -511,13 +516,7 @@ class Evaluator:
             gdf = bf.df.groupBy(*[F.col(c) for c in key_cols]).agg(*agg_cols)
         else:
             gdf = bf.df.agg(*agg_cols) if agg_cols else bf.df.limit(1)
-        for v in raw_keyed:
-            rb = bf.raw_vars[v]
-            lex, dt, lang, num = rb.render([F.col(c) for c in rb.cols])
-            gdf = (gdf.withColumn(v, lex)
-                      .withColumn(f"{v}__dt", dt)
-                      .withColumn(f"{v}__lang", lang)
-                      .withColumn(f"{v}__num", num))
+        gdf = _rerender(gdf, {v: bf.raw_vars[v] for v in raw_keyed})
 
         out = BindingFrame(
             gdf,

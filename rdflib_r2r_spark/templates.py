@@ -1,5 +1,6 @@
-"""R2RML IRI/literal templates: parse, expand, invert — in Python, Spark
-Column, and DuckDB SQL form.
+"""R2RML IRI/literal templates: parse, expand, invert — in Python and as
+SQL text (which Spark parses through one ``F.expr`` and DuckDB runs as the
+oracle).
 
 Semantics mirror the reference exactly:
 
@@ -20,15 +21,7 @@ import re
 from dataclasses import dataclass
 from string import Formatter
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from rdflib_r2r_spark.terms import (
-    iri_safe_col,
-    iri_safe_py,
-    iri_safe_sql,
-    iri_safe_sql_spark,
-)
+from rdflib_r2r_spark.terms import iri_safe_py, iri_safe_sql
 
 
 @dataclass(frozen=True)
@@ -76,63 +69,13 @@ def _canonical_str(v) -> str:
     return str(v)
 
 
-def template_to_column(
-    template: str,
-    resolve,
-    iri: bool = True,
-    wrap: bool = True,
-) -> Column:
-    """Build a Spark Column that renders the template.
-
-    ``resolve(colname) -> Column`` lets the caller qualify columns
-    (aliases, joined parents). NULL in any slot propagates to NULL via
-    F.concat's null semantics. ``wrap`` adds the ``<...>`` IRI lexical
-    wrapper of our term encoding.
-    """
-    exprs: list[Column] = []
-    for part in parse_template(template):
-        if part.prefix:
-            exprs.append(F.lit(part.prefix))
-        if part.column:
-            c = resolve(part.column).cast("string")
-            exprs.append(iri_safe_col(c) if iri else c)
-    if wrap and iri:
-        exprs = [F.lit("<"), *exprs, F.lit(">")]
-    if not exprs:
-        return F.lit("")
-    return F.concat(*exprs)
-
-
-def template_to_spark_expr(
-    template: str,
-    qualify,
-    iri: bool = True,
-    wrap: bool = True,
-) -> Column:
-    """Fast-path twin of :func:`template_to_column`: render the SAME
-    expression as one Spark-SQL text parsed by a single ``F.expr`` call.
-
-    Why: the Column-API construction is ~100 Py4J round trips per term
-    (one per replace/lit in the iri-safe chain), which made SPARQL query
-    COMPILE time rival execution time (bi4: ~2.1s compile, ~1.5s of it
-    in template renders).  ``F.expr`` ships the whole tree in one round
-    trip; the generated text is the engine-neutral dialect subset
-    (template_to_sql/iri_safe_sql) that both Spark and DuckDB parse, so
-    the expression semantics are byte-identical to the slow path (pinned
-    by tests).
-
-    ``qualify(colname) -> str`` must return a Spark-SQL expression string
-    for the source column (e.g. backtick-qualified ``alias.col``).
-
-    Round 7: slots render via :func:`terms.iri_safe_sql_spark` — the
-    RLIKE-gated chain (29 string rebuilds per row -> one containment scan
-    for clean values).  The oracle side keeps the ungated
-    ``template_to_sql`` text (frozen); value parity is pinned by tests.
-    """
-    return F.expr(
-        template_to_sql(template, qualify=qualify, iri=iri, wrap=wrap,
-                        _safe_fn=iri_safe_sql_spark)
-    )
+def sql_str_lit(s: str) -> str:
+    """Engine-neutral SQL string literal: Spark C-escapes backslashes inside
+    quotes, DuckDB does not — emit backslash as chr(92) so the same text
+    parses identically in both (see terms.iri_safe_sql)."""
+    parts = s.split("\\")
+    quoted = ["'" + p.replace("'", "''") + "'" for p in parts]
+    return " || chr(92) || ".join(quoted) if len(quoted) > 1 else quoted[0]
 
 
 def template_to_sql(
@@ -140,27 +83,22 @@ def template_to_sql(
     qualify=lambda c: f'"{c}"',
     iri: bool = True,
     wrap: bool = True,
-    _safe_fn=None,
+    safe=iri_safe_sql,
 ) -> str:
-    """DuckDB-SQL twin of :func:`template_to_column` (same bytes).
+    """SQL text rendering the template; the same bytes as
+    :func:`expand_template_py` (plus the ``<...>`` IRI wrapper of our term
+    encoding when ``wrap``).
 
-    Uses ``||`` concatenation, which propagates NULL like F.concat.
-    Default text is the FROZEN oracle dialect; ``_safe_fn`` lets the
-    Spark fast path substitute the gated encoder (never reaches DuckDB).
-    """
-    safe = _safe_fn or iri_safe_sql
-    def lit_sql(s: str) -> str:
-        # engine-neutral string literal: Spark C-escapes backslashes inside
-        # quotes, DuckDB does not — emit backslash as chr(92) so the same
-        # text parses identically in both (see iri_safe_sql)
-        parts = s.split("\\")
-        quoted = ["'" + p.replace("'", "''") + "'" for p in parts]
-        return " || chr(92) || ".join(quoted) if len(quoted) > 1 else quoted[0]
-
+    ``qualify(colname) -> str`` returns the SQL text of a source column.
+    ``||`` concatenation propagates NULL, so a NULL in any slot renders NULL
+    (R2RML: no term, no triple).  The default text is the FROZEN oracle
+    dialect that both DuckDB and Spark parse; the Spark compiler passes
+    ``safe=terms.iri_safe_sql_spark``, the RLIKE-gated encoder (never
+    reaches DuckDB, value-identical)."""
     exprs: list[str] = []
     for part in parse_template(template):
         if part.prefix:
-            exprs.append(lit_sql(part.prefix))
+            exprs.append(sql_str_lit(part.prefix))
         if part.column:
             c = f"CAST({qualify(part.column)} AS STRING)"
             exprs.append(safe(c) if iri else c)

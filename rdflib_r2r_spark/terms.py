@@ -1,9 +1,14 @@
-"""RDF term model + lexical encoding, with THREE synchronized backends:
+"""RDF term model + lexical encoding, in two synchronized forms:
 
 1. pure Python (used by the mapping kernel, template inversion, tests),
-2. Spark ``Column`` expressions (JVM-side, whole-stage-codegen friendly —
-   no Python in the hot path),
-3. ANSI-SQL text (so DuckDB oracles can reproduce the exact same bytes).
+2. SQL text.  The mapping compiler renders every term map as SQL text that
+   Spark parses through one ``F.expr`` (JVM-side, whole-stage-codegen
+   friendly, no Python in the hot path), and the DuckDB oracle runs the
+   same dialect to reproduce the exact same bytes.  Spark-only text
+   (:func:`iri_safe_sql_spark`) may differ in form, never in value.
+
+The Column-API :func:`iri_safe_col` remains for SPARQL's ENCODE_FOR_URI,
+whose argument is an arbitrary Column expression.
 
 Term encoding in DataFrames (cf. SURVEY.md §1.1): each of subj/pred/obj is a
 single lexical string column; kind is derivable from the prefix —
@@ -15,7 +20,7 @@ in separate ``obj_dt`` / ``obj_lang`` columns.
 IRI-safe encoding mirrors the reference's ``iri_safe`` =
 ``urllib.parse.quote(v, safe="")`` (reference: rdflib_r2r/r2r_mapping.py:20-25)
 restricted to printable ASCII; the same ordered replace-chain is emitted for
-Spark and DuckDB so all three backends are byte-identical on our corpora.
+Spark and DuckDB so every form is byte-identical on our corpora.
 """
 
 from __future__ import annotations
@@ -43,8 +48,8 @@ XSD_HEXBINARY = XSD + "hexBinary"
 # RFC 3986 unreserved: ALPHA / DIGIT / '-' / '.' / '_' / '~'.
 _UNSAFE_ASCII = "% !\"#$&'()*+,/:;<=>?@[\\]^`{|}"
 
-# Ordered (char, replacement) pairs — the single source of truth for all
-# three backends.
+# Ordered (char, replacement) pairs — the single source of truth for every
+# form.
 PERCENT_PAIRS: list[tuple[str, str]] = [(c, "%%%02X" % ord(c)) for c in _UNSAFE_ASCII]
 
 

@@ -81,6 +81,10 @@ def test_resume_skips_done(store):
     time_queries(store, reports, timeout_s=120.0, done=done)
     assert reports[0].seconds is None      # skipped: already done
     assert reports[1].seconds is not None  # executed
+    # and to completion: a job left running by an earlier cancelled query
+    # must not starve it into a timeout
+    assert not reports[1].timed_out, reports[1].exec_error
+    assert reports[1].rows == 133
     assert done == {0, 1}
 
 

@@ -166,6 +166,30 @@ def test_direct_mapping_generator(spark):
     assert ("<http://example.com/base/EMP#ename>", "SMITH") in rows
 
 
+def test_self_referencing_join_matches_oracle(spark):
+    # child and parent are the same (memoized) source DataFrame: the join
+    # arm must still tell the two sides apart
+    emp = pd.DataFrame({"empno": [1, 2, 3], "ename": ["A", "B", "C"], "mgr": [None, 1, 1]})
+    semp = spark.createDataFrame(emp, "empno long, ename string, mgr double")
+    tmaps = direct_mapping(
+        {"EMP": semp.schema},
+        primary_keys={"EMP": ["empno"]},
+        foreign_keys={"EMP": [(["mgr"], "EMP", ["empno"])]},
+    )
+    comp = SparkMappingCompiler(spark, {"EMP": semp})
+    got = comp.compile(tmaps).toPandas()
+    con = duckdb.connect()
+    con.register("EMP", emp)
+    want = con.execute(mapping_to_duckdb_sql(tmaps)).fetchdf()
+    refs = {(r[0], r[2]) for r in as_sorted_tuples(got) if r[1].endswith("#ref-mgr>")}
+    assert refs == {
+        ("<http://example.com/base/EMP/empno=2>", "<http://example.com/base/EMP/empno=1>"),
+        ("<http://example.com/base/EMP/empno=3>", "<http://example.com/base/EMP/empno=1>"),
+    }
+    assert {r for r in as_sorted_tuples(got) if r[1].endswith("#ref-mgr>")} == {
+        r for r in as_sorted_tuples(want) if r[1].endswith("#ref-mgr>")}
+
+
 def test_graph_map(spark):
     t = pd.DataFrame({"k": [1]})
     tmap = TriplesMap(
@@ -213,3 +237,81 @@ def test_binary_column_hexbinary_roundtrip(spark):
     assert row["obj"] == "0001ABFF".upper() == "0001ABFF"
     assert row["obj_dt"] == terms.XSD_HEXBINARY
     assert make_node(row["obj"], row["obj_dt"], None) == payload
+
+
+def test_canonical_double_and_datetime_golden(spark):
+    # natural RDF lexical forms of double / timestamp columns (R2RML §10.2),
+    # expected strings written out independently of the SQL renderer
+    import datetime
+
+    import pyspark.sql.types as T
+
+    from rdflib_r2r_spark.compiler import backtick
+
+    schema = T.StructType([
+        T.StructField("d", T.DoubleType()),
+        T.StructField("ts", T.TimestampType()),
+    ])
+    rows = [
+        (20.0, datetime.datetime(2008, 2, 29, 13, 5, 7)),
+        (-0.5, None),
+        (1e7, None),
+        (0.0, None),
+        (float("nan"), None),
+        (float("inf"), None),
+        (float("-inf"), None),
+        (None, None),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    types = {f.name: f.dataType for f in schema.fields}
+    comp = SparkMappingCompiler(spark, {})
+    d_lex, d_dt, _ = comp.term_columns(TermMap(column="d"), "O", backtick, types)
+    t_lex, t_dt, _ = comp.term_columns(TermMap(column="ts"), "O", backtick, types)
+    got = df.select(d_lex.alias("d"), t_lex.alias("t"),
+                    d_dt.alias("ddt"), t_dt.alias("tdt")).collect()
+    assert [r["d"] for r in got] == [
+        "2.0E1", "-5.0E-1", "1.0E7", "0.0E0", "NaN", "INF", "-INF", None]
+    assert [r["t"] for r in got] == ["2008-02-29T13:05:07"] + [None] * 7
+    assert got[0]["ddt"] == terms.XSD_DOUBLE
+    assert got[0]["tdt"] == terms.XSD_DATETIME
+
+
+def test_source_df_memoized_per_store_until_register(spark):
+    # fresh SPARQL requests on one store share one analyzed source plan;
+    # register() drops it so a re-registered table is seen
+    from rdflib_r2r_spark.sparql.store import SparkR2RStore
+
+    def likes_df(n):
+        return spark.createDataFrame(
+            pd.DataFrame({"id": list(range(1, n + 1)), "likedObj": [f"o{i}" for i in range(n)]}))
+
+    tmap = TriplesMap(
+        name="likes",
+        source=LogicalSource(sql_query="SELECT id, likedObj FROM LIKES_MEMO"),
+        subject_map=SubjectMap(template="http://ex/likes/{id}"),
+        pomaps=(
+            PredicateObjectMap(
+                predicates=(const_iri("http://ex/likes"),),
+                objects=(TermMap(column="likedObj"),),
+            ),
+        ),
+    )
+    store = SparkR2RStore(spark, {"LIKES_MEMO": likes_df(2)}, [tmap])
+    seen = []
+    orig = store.compiler.source_df
+
+    def spy(source):
+        seen.append(orig(source))
+        return seen[-1]
+
+    store.compiler.source_df = spy
+    q1 = "SELECT ?s ?o WHERE { ?s <http://ex/likes> ?o }"
+    q2 = "SELECT ?o WHERE { ?s <http://ex/likes> ?o }"
+    assert store.query(q1).count() == 2
+    assert store.query(q2).count() == 2
+    assert len(seen) >= 2 and all(df is seen[0] for df in seen)
+
+    store.compiler.register("LIKES_MEMO", likes_df(3))
+    q3 = "SELECT ?s WHERE { ?s <http://ex/likes> ?o }"
+    assert store.query(q3).count() == 3
+    assert seen[-1] is not seen[0]

@@ -19,7 +19,7 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 from rdflib_r2r_spark import terms
-from rdflib_r2r_spark.compiler import SparkMappingCompiler
+from rdflib_r2r_spark.compiler import SparkMappingCompiler, backtick
 from rdflib_r2r_spark.mapping import TermMap
 
 
@@ -77,7 +77,7 @@ def compiler(spark):
 def test_null_input_renders_null_lexical(spark, compiler, name, tm, position):
     df = _null_row_df(spark)
     types = {f.name: f.dataType for f in SCHEMA.fields}
-    lex, _, _ = compiler.term_columns(tm, position, lambda c: df[c], types)
+    lex, _, _ = compiler.term_columns(tm, position, backtick, types)
     got = df.select(lex.alias("lex")).collect()[0]["lex"]
     assert got is None, (
         f"term map {name!r} rendered NULL input as {got!r} — render is no "
@@ -92,7 +92,7 @@ def test_multi_ref_template_null_in_any_position(spark, compiler):
     tm = TermMap(template="http://ex/{i}/{s}")
     for bound in ({"s"}, {"i"}):
         df = _null_row_df(spark, non_null=bound)
-        lex, _, _ = compiler.term_columns(tm, "S", lambda c: df[c], types)
+        lex, _, _ = compiler.term_columns(tm, "S", backtick, types)
         got = df.select(lex.alias("lex")).collect()[0]["lex"]
         assert got is None, f"template with only {bound} bound rendered {got!r}"
 

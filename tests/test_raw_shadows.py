@@ -20,6 +20,7 @@ import contextlib
 import io
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -100,6 +101,80 @@ def test_raw_binding_eligibility_guards(spark):
     # duplicated slot breaks the slot<->raw arity correspondence — out
     assert comp._raw_binding("v", occ_for("http://x/{a}/{a}",
                                           {"a": T.LongType()})) is None
+
+    # empty or digit-only separator: (1,23)/(12,3) both render .../123 and
+    # (11,23)/(1,123) both render .../11123 — out
+    longs = {"a": T.LongType(), "b": T.LongType()}
+    for tpl in ("http://x/{a}{b}", "http://x/{a}1{b}"):
+        assert comp._raw_binding("v", occ_for(tpl, longs)) is None, tpl
+
+
+def _integral_parses(template: str, lexical: str) -> list[tuple]:
+    """Every tuple of integers whose canonical render under ``template`` is
+    ``lexical`` (exhaustive: each slot tries every canonical ``-?[0-9]+``
+    token at its position)."""
+    import re
+
+    from rdflib_r2r_spark.templates import parse_template
+
+    parts = parse_template(template)
+    out: list[tuple] = []
+
+    def walk(i: int, pos: int, acc: tuple) -> None:
+        if i == len(parts):
+            if pos == len(lexical):
+                out.append(acc)
+            return
+        part = parts[i]
+        if not lexical.startswith(part.prefix, pos):
+            return
+        pos += len(part.prefix)
+        if part.column is None:
+            walk(i + 1, pos, acc)
+            return
+        for end in range(pos + 1, len(lexical) + 1):
+            tok = lexical[pos:end]
+            if re.fullmatch(r"-?[0-9]+", tok) and str(int(tok)) == tok:
+                walk(i + 1, end, acc + (int(tok),))
+
+    walk(0, 0, ())
+    return out
+
+
+_SEP = st.text(alphabet="0123456789-/_a.", max_size=3)
+_INT = st.integers(min_value=-2000, max_value=200000)
+
+
+@settings(max_examples=300, deadline=None)
+@given(seps=st.lists(_SEP, min_size=1, max_size=3), suffix=_SEP,
+       wide=st.lists(st.booleans(), min_size=4, max_size=4), data=st.data())
+def test_raw_binding_injective_property(seps, suffix, wide, data):
+    # whenever _raw_binding accepts an integral multi-slot template, raw
+    # equality <=> lexical equality: no other integral tuple renders the
+    # same IRI (checked exhaustively per drawn tuple), and two drawn tuples
+    # render equal exactly when they are equal
+    from pyspark.sql import types as T
+
+    from rdflib_r2r_spark.mapping import TermMap
+    from rdflib_r2r_spark.sparql.bgp import BGPCompiler, Occurrence, Slot
+    from rdflib_r2r_spark.templates import expand_template_py
+
+    cols = [f"c{i}" for i in range(len(seps) + 1)]
+    template = "http://x/{c0}" + "".join(
+        sep + "{" + c + "}" for sep, c in zip(seps, cols[1:])) + suffix
+    types = {c: T.LongType() if w else T.IntegerType() for c, w in zip(cols, wide)}
+    comp = BGPCompiler.__new__(BGPCompiler)  # _raw_binding needs no state
+    comp.compiler = None
+    occ = Occurrence(tm=TermMap(template=template, term_type="IRI"),
+                     slot=Slot(alias="t0", df=None, types=types), position="S")
+    if comp._raw_binding("v", occ) is None:
+        return
+    t1 = data.draw(st.tuples(*[_INT] * len(cols)))
+    t2 = data.draw(st.tuples(*[_INT] * len(cols)))
+    lex1 = expand_template_py(template, dict(zip(cols, t1)))
+    lex2 = expand_template_py(template, dict(zip(cols, t2)))
+    assert (t1 == t2) == (lex1 == lex2)
+    assert _integral_parses(template, lex1) == [t1], (template, t1, lex1)
 
 
 def test_raw_eq_null_semantics(spark):

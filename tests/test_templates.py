@@ -71,30 +71,29 @@ def test_nt_term():
 
 
 def test_template_spark_expr_fast_path_parity(spark):
-    # templates.template_to_spark_expr (one F.expr parse) must render the
-    # SAME bytes as the Column-API slow path, including percent-unsafe
-    # chars, quotes, and backslashes in both the column VALUES and the
-    # template PREFIX text
+    # the Spark render of a template (SQL text with the RLIKE-gated
+    # encoder, parsed by one F.expr) must produce the bytes of the
+    # independent Python reference expand_template_py, including
+    # percent-unsafe chars, quotes, and backslashes in both the column
+    # VALUES and the template PREFIX text, and NULL for a NULL slot
     from pyspark.sql import functions as F
 
-    from rdflib_r2r_spark.templates import (
-        template_to_column, template_to_spark_expr)
+    from rdflib_r2r_spark.templates import template_to_sql
 
-    df = spark.createDataFrame(
-        [("a b/c", 1), ("x'y\"z", 2), ("back\\slash", 3), ("plain", 4),
-         (None, 5)],
-        "v string, k int",
-    ).alias("t")
+    rows = [("a b/c", 1), ("x'y\"z", 2), ("back\\slash", 3), ("plain", 4),
+            (None, 5)]
+    df = spark.createDataFrame(rows, "v string, k int").alias("t")
     cases = [
         ("http://ex.org/{v}/{k}", True, True),
         ("pre'fix\\x-{v}", False, False),
         ("{k}-{v}", True, False),
     ]
     for tpl, iri, wrap in cases:
-        slow = template_to_column(tpl, lambda c: F.col(f"t.{c}"),
-                                  iri=iri, wrap=wrap)
-        fast = template_to_spark_expr(tpl, lambda c: f"`t`.`{c}`",
-                                      iri=iri, wrap=wrap)
-        rows = df.select(slow.alias("s"), fast.alias("f")).collect()
-        for r in rows:
-            assert r["s"] == r["f"], (tpl, r["s"], r["f"])
+        sql = template_to_sql(tpl, lambda c: f"`t`.`{c}`", iri=iri, wrap=wrap,
+                              safe=terms.iri_safe_sql_spark)
+        got = [r[0] for r in df.select(F.expr(sql)).collect()]
+        want = []
+        for v, k in rows:
+            e = expand_template_py(tpl, {"v": v, "k": k}, iri=iri)
+            want.append(None if e is None else (f"<{e}>" if wrap and iri else e))
+        assert got == want, (tpl, got, want)
